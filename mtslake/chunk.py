@@ -61,7 +61,7 @@ from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
 from . import codec
-from .config import EngineConfig, DEFAULT
+from .config import EngineConfig, DEFAULT, session_width
 from .series import TS_COL
 
 SHA1_W = 20  # text_sha1 stored as fixed-width 20-byte binary stream
@@ -264,11 +264,10 @@ def _encode_groups(
     comp_level: int,
     do_time_diff: bool,
     channels: tuple[ChannelSpec, ...],
-    emit_key,
 ):
-    """Shared per-group encode loop: 1 + len(channels) codec calls per
-    group on contiguous numpy slices, raw/comp byte accounting, and the
-    SHA1 ledger over ts + the NUMERIC channels (binary channels are
+    """Per-group encode loop: 1 + len(channels) codec calls per group on
+    contiguous numpy slices, raw/comp byte accounting, and the SHA1
+    ledger over ts + the NUMERIC channels (binary channels are
     digests/opaque payloads — hashing a hash adds nothing)."""
     # ≙ do_time_diff=False (mtscomp.py:55): raw-codec timestamps; decode
     # is unaffected because payload headers carry the codec id
@@ -279,164 +278,104 @@ def _encode_groups(
     ch_plan = [
         (c, c.resolved_codec(), c.resolved_entropy()) for c in channels
     ]
-    ctx = warnings.catch_warnings()
-    ctx.__enter__()
-    warnings.simplefilter("ignore", RuntimeWarning)
-    try:
-        _encode_groups_inner(out, data, ts_all, starts, ends, comp_level,
-                             ts_codec, ch_plan, emit_key)
-    finally:
-        ctx.__exit__(None, None, None)
-
-
-def _encode_groups_inner(
-    out, data, ts_all, starts, ends, comp_level, ts_codec, ch_plan,
-    emit_key,
-):
-    for s, e in zip(starts, ends):
-        ts = ts_all[s:e]
-        p_ts = codec.encode_column(ts, ts_codec, comp_level)
-        raw_sig = ts.nbytes
-        comp_sig = len(p_ts)
-        raw_bin = 0
-        comp_bin = 0
-        sha_src: dict[str, np.ndarray] = {}
-        for c, c_codec, c_entropy in ch_plan:
-            a = data[c.name][s:e]
-            flat = a.ravel() if c.is_binary else a
-            p = codec.encode_column(
-                flat, c_codec, comp_level, entropy=c_entropy,
-            )
-            out[c.pcol].append(p)
-            if c.is_binary:
-                raw_bin += flat.nbytes
-                comp_bin += len(p)
-            else:
-                raw_sig += flat.nbytes
-                comp_sig += len(p)
-                sha_src[c.name] = flat
-                # per-chunk value stats (Iceberg-manifest-style): a
-                # value predicate prunes chunk rows without decoding.
-                # Spark and DuckDB both order NaN LARGER than every
-                # numeric in comparisons (NaN >= x true, NaN <= x
-                # false — verified empirically on both), so the
-                # order-consistent bounds for a float channel are:
-                #   min = nanmin  (NaN is never the smallest value;
-                #         plain min() would let one NaN poison the
-                #         lower bound to NaN and value_min <= upper
-                #         would silently prune the chunk's VALID rows
-                #         — Iceberg tracks nan_value_counts separately
-                #         for exactly this hazard)
-                #   max = plain max (NaN if any NaN present — correct:
-                #         the chunk's largest value in engine order IS
-                #         NaN, and NaN >= lower keeps it for
-                #         lower-bound predicates whose exact filter
-                #         also matches the NaN rows)
-                # An all-NaN chunk gets (NaN, NaN): kept for >= lower
-                # (its NaN rows match), pruned for <= upper (nothing
-                # in it can match) — both consistent.
-                if flat.dtype.kind == "f":
-                    # RuntimeWarning (all-NaN) suppressed once by the
-                    # caller's hoisted warnings context
-                    out[f"{c.name}_min"].append(float(np.nanmin(flat)))
-                    out[f"{c.name}_max"].append(float(flat.max()))
-                else:
-                    out[f"{c.name}_min"].append(int(flat.min()))
-                    out[f"{c.name}_max"].append(int(flat.max()))
-        emit_key(out, int(s))
-        out["ts_min"].append(int(ts[0]))
-        out["ts_max"].append(int(ts[-1]))
-        out["n_points"].append(int(e - s))
-        out["raw_nbytes"].append(raw_sig + raw_bin)
-        out["comp_nbytes"].append(comp_sig + comp_bin)
-        out["raw_signal_nbytes"].append(raw_sig)
-        out["comp_signal_nbytes"].append(comp_sig)
-        out["sha1"].append(codec.chunk_sha1(ts, sha_src))
-        out["p_ts"].append(p_ts)
-
-
-def _pdf_channel_data(
-    pdf: pd.DataFrame, channels: tuple[ChannelSpec, ...], n: int
-) -> dict[str, np.ndarray]:
-    data: dict[str, np.ndarray] = {}
-    for c in channels:
-        if c.is_binary and c.hex:
-            data[c.name] = np.frombuffer(
-                bytes.fromhex("".join(pdf[c.name])), dtype=np.uint8
-            ).reshape(n, c.width)
-        elif c.is_binary:
-            buf = b"".join(bytes(v) for v in pdf[c.name])
-            if len(buf) != n * c.width:
-                raise ValueError(
-                    f"binary channel {c.name} is not fixed-width "
-                    f"{c.width} (got {len(buf)} bytes for {n} rows)"
+    with warnings.catch_warnings():
+        warnings.simplefilter("ignore", RuntimeWarning)
+        for s, e in zip(starts, ends):
+            ts = ts_all[s:e]
+            p_ts = codec.encode_column(ts, ts_codec, comp_level)
+            raw_sig = ts.nbytes
+            comp_sig = len(p_ts)
+            raw_bin = 0
+            comp_bin = 0
+            sha_src: dict[str, np.ndarray] = {}
+            for c, c_codec, c_entropy in ch_plan:
+                a = data[c.name][s:e]
+                flat = a.ravel() if c.is_binary else a
+                p = codec.encode_column(
+                    flat, c_codec, comp_level, entropy=c_entropy,
                 )
-            data[c.name] = np.frombuffer(buf, dtype=np.uint8).reshape(
-                n, c.width
-            )
-        else:
-            data[c.name] = pdf[c.name].to_numpy(np.dtype(c.dtype))
-    return data
+                out[c.pcol].append(p)
+                if c.is_binary:
+                    raw_bin += flat.nbytes
+                    comp_bin += len(p)
+                else:
+                    raw_sig += flat.nbytes
+                    comp_sig += len(p)
+                    sha_src[c.name] = flat
+                    # per-chunk value stats (Iceberg-manifest-style): a
+                    # value predicate prunes chunk rows without
+                    # decoding. Spark and DuckDB both order NaN LARGER
+                    # than every numeric in comparisons (NaN >= x true,
+                    # NaN <= x false — verified empirically on both), so
+                    # the order-consistent bounds for a float channel
+                    # are:
+                    #   min = nanmin  (NaN is never the smallest value;
+                    #         plain min() would let one NaN poison the
+                    #         lower bound to NaN and value_min <= upper
+                    #         would silently prune the chunk's VALID
+                    #         rows — Iceberg tracks nan_value_counts
+                    #         separately for exactly this hazard)
+                    #   max = plain max (NaN if any NaN present —
+                    #         correct: the chunk's largest value in
+                    #         engine order IS NaN, and NaN >= lower
+                    #         keeps it for lower-bound predicates whose
+                    #         exact filter also matches the NaN rows)
+                    # An all-NaN chunk gets (NaN, NaN): kept for >=
+                    # lower (its NaN rows match), pruned for <= upper
+                    # (nothing in it can match) — both consistent.
+                    if flat.dtype.kind == "f":
+                        # nanmin's all-NaN RuntimeWarning is silenced
+                        # by the warnings context around the loop
+                        out[f"{c.name}_min"].append(float(np.nanmin(flat)))
+                        out[f"{c.name}_max"].append(float(flat.max()))
+                    else:
+                        out[f"{c.name}_min"].append(int(flat.min()))
+                        out[f"{c.name}_max"].append(int(flat.max()))
+            out["ts_min"].append(int(ts[0]))
+            out["ts_max"].append(int(ts[-1]))
+            out["n_points"].append(int(e - s))
+            out["raw_nbytes"].append(raw_sig + raw_bin)
+            out["comp_nbytes"].append(comp_sig + comp_bin)
+            out["raw_signal_nbytes"].append(raw_sig)
+            out["comp_signal_nbytes"].append(comp_sig)
+            out["sha1"].append(codec.chunk_sha1(ts, sha_src))
+            out["p_ts"].append(p_ts)
 
 
-def _encode_block(
-    pdf: pd.DataFrame,
-    max_points: int | None = None,
-    comp_level: int = 1,
-    do_time_diff: bool = True,
-    channels: tuple[ChannelSpec, ...] = DEFAULT_CHANNELS,
-) -> pd.DataFrame:
-    """Encode every (url, chunk_id) group in a sorted block; one output
-    row per group. Vectorized group detection; per-group work is
-    1 + n_channels codec calls on contiguous numpy slices. (pandas
-    twin of the Arrow kernel — used by the streaming sealer, which
-    receives pandas frames from applyInPandasWithState.)"""
-    n = len(pdf)
-    urls = pdf["url"].to_numpy()
-    cids = pdf["chunk_id"].to_numpy(np.int64)
-    langs = pdf["lang"].to_numpy()
-    ts_all = pdf[TS_COL].to_numpy(np.int64)
-    data = _pdf_channel_data(pdf, channels, n)
-
-    change = np.flatnonzero((urls[1:] != urls[:-1]) | (cids[1:] != cids[:-1])) + 1
-    starts = np.concatenate(([0], change))
-    ends = np.concatenate((change, [n]))
-    starts, ends = _segment_runs(starts, ends, max_points)
-
-    out: dict[str, list] = {c: [] for c in _out_cols(channels)}
-
-    def emit_key(o, s):
-        o["url"].append(urls[s])
-        o["chunk_id"].append(cids[s])
-        o["lang"].append(langs[s])
-
-    _encode_groups(out, data, ts_all, starts, ends, comp_level,
-                   do_time_diff, channels, emit_key)
-    return pd.DataFrame(out)
-
-
-def _binary_flat(arr: pa.Array, n: int) -> np.ndarray:
-    """Zero-copy view of a BinaryArray's packed value bytes (each value
-    a fixed byte width), honoring array offset/slices.
+def _binary_rows(arr: pa.Array, n: int, c: ChannelSpec) -> np.ndarray:
+    """Zero-copy ``(n, c.width)`` view of a BinaryArray's packed value
+    bytes, honoring array offset/slices.
 
     The view assumes 32-bit offsets (pa.binary()) and no nulls; with
     ``spark.sql.execution.arrow.useLargeVarTypes=true`` the column
     arrives as large_binary (64-bit offsets) and the raw buffer read
-    would silently misalign — fail loudly instead."""
+    would silently misalign — fail loudly instead. Every value must be
+    exactly ``c.width`` bytes: a total-size check alone would let a
+    short value borrow bytes from its neighbour and encode silently
+    shifted rows (the hex form hits this when ``unhex`` is fed short
+    hex)."""
     if arr.type != pa.binary():
         raise TypeError(
             f"binary channel must be pa.binary() (got {arr.type}); disable "
             "spark.sql.execution.arrow.useLargeVarTypes for this job"
         )
     if arr.null_count:
-        raise ValueError("binary channel contains nulls (malformed hex?)")
-    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)
-    start = int(offsets[arr.offset])
-    end = int(offsets[arr.offset + n])
-    return np.frombuffer(arr.buffers()[2], dtype=np.uint8)[start:end]
+        raise ValueError(
+            f"binary channel {c.name} contains nulls (malformed hex?)"
+        )
+    offsets = np.frombuffer(arr.buffers()[1], dtype=np.int32)[
+        arr.offset:arr.offset + n + 1
+    ]
+    if (np.diff(offsets) != c.width).any():
+        raise ValueError(
+            f"binary channel {c.name} is not fixed-width {c.width}"
+        )
+    return np.frombuffer(arr.buffers()[2], dtype=np.uint8)[
+        offsets[0]:offsets[-1]
+    ].reshape(n, c.width)
 
 
-def _encode_block_arrow(
+def _encode_block(
     t: pa.Table,
     chunk_dur: int,
     max_points: int | None = None,
@@ -444,15 +383,18 @@ def _encode_block_arrow(
     do_time_diff: bool = True,
     channels: tuple[ChannelSpec, ...] = DEFAULT_CHANNELS,
 ) -> pa.RecordBatch:
-    """Arrow-native twin of _encode_block: url/lang stay in Arrow
-    buffers (one .as_py() per GROUP, never per row), binary-channel
-    bytes are a zero-copy view. Same codec calls → bit-identical
-    payloads.
+    """Encode every (url, chunk_id) group of a sorted block; one output
+    row per group (or per hot-chunk segment). The one encode kernel:
+    ``compress_series`` streams Arrow batches through it and the
+    streaming sealer hands it each url's closed points, so batch and
+    streaming chunks are bit-identical by construction.
 
-    chunk ids are DERIVED in-kernel (ts // chunk_dur) instead of being
-    shipped as a column: the encode phase is Arrow-IPC-bandwidth-bound
-    (BENCH/PROFILE_NOTES.md), so derivable columns never cross the
-    boundary."""
+    url/lang stay in Arrow buffers (one vectorized take per block,
+    never a Python object per row), binary-channel bytes are a
+    zero-copy view. chunk ids are DERIVED in-kernel (ts // chunk_dur)
+    instead of being shipped as a column: the encode phase is
+    Arrow-IPC-bandwidth-bound (BENCH/PROFILE_NOTES.md), so derivable
+    columns never cross the boundary."""
     t = t.combine_chunks()
     n = t.num_rows
     url = t.column("url").chunk(0)
@@ -463,7 +405,7 @@ def _encode_block_arrow(
     for c in channels:
         col = t.column(c.name).chunk(0)
         if c.is_binary:
-            data[c.name] = _binary_flat(col, n).reshape(n, c.width)
+            data[c.name] = _binary_rows(col, n, c)
         else:
             data[c.name] = col.to_numpy()
 
@@ -486,11 +428,8 @@ def _encode_block_arrow(
     out["lang"] = lang.take(start_idx).to_pylist()
     out["chunk_id"] = cids[np.asarray(starts)].tolist()
 
-    def emit_key(o, s):  # keys precomputed above
-        pass
-
     _encode_groups(out, data, ts_all, starts, ends, comp_level,
-                   do_time_diff, channels, emit_key)
+                   do_time_diff, channels)
     return pa.RecordBatch.from_pydict(out, schema=_pa_chunk_schema(channels))
 
 
@@ -538,19 +477,19 @@ def _encode_stream(
             # only the < max_points residual buffered
             if max_points and buf.num_rows > max_points:
                 n_full = (buf.num_rows // max_points) * max_points
-                yield _encode_block_arrow(
+                yield _encode_block(
                     buf.slice(0, n_full), chunk_dur, max_points,
                     comp_level, do_time_diff, channels,
                 )
                 buf = buf.slice(n_full) if n_full < buf.num_rows else None
             continue
         buf = t.slice(n - n_tail)
-        yield _encode_block_arrow(
+        yield _encode_block(
             t.slice(0, n - n_tail), chunk_dur, max_points, comp_level,
             do_time_diff, channels,
         )
     if buf is not None and buf.num_rows:
-        yield _encode_block_arrow(
+        yield _encode_block(
             buf, chunk_dur, max_points, comp_level, do_time_diff, channels
         )
 
@@ -600,12 +539,9 @@ def compress_series(
         # (what a cluster tunes shuffle.partitions for) and forbids
         # the collapse; tiny inputs pay a few ms of empty-task
         # overhead instead of a serial encode.
-        sess = series.sparkSession
-        try:
-            n_part = int(sess.conf.get("spark.sql.shuffle.partitions"))
-        except (TypeError, ValueError):
-            n_part = sess.sparkContext.defaultParallelism
-        keyed = keyed.repartition(n_part, "url", "chunk_id")
+        keyed = keyed.repartition(
+            session_width(series.sparkSession), "url", "chunk_id"
+        )
     from functools import partial
 
     encode = partial(

@@ -348,8 +348,3 @@ def chunk_sha1(ts: np.ndarray, channels: dict[str, np.ndarray]) -> str:
     for name in sorted(channels):
         h.update(np.ascontiguousarray(channels[name]).tobytes())
     return h.hexdigest()
-
-
-def compression_ratio(raw_nbytes: int, comp_nbytes: int) -> float:
-    """csize/raw, as logged per chunk by the reference (mtscomp.py:490-492)."""
-    return float(comp_nbytes) / float(raw_nbytes) if raw_nbytes else 0.0

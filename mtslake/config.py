@@ -77,6 +77,19 @@ class EngineConfig:
         )
 
 
+def session_width(spark) -> int:
+    """The session's configured shuffle width
+    (``spark.sql.shuffle.partitions``, else ``defaultParallelism``):
+    the explicit partition count for an exchange feeding a
+    per-row-expensive Python stage. An explicit-N repartition is exempt
+    from AQE's byte-sized coalescing, which would otherwise run such a
+    stage on a handful of tasks."""
+    try:
+        return int(spark.conf.get("spark.sql.shuffle.partitions"))
+    except (TypeError, ValueError):
+        return spark.sparkContext.defaultParallelism
+
+
 def config_path(path: str | None = None) -> str:
     """Site-default file: $MTSLAKE_CONFIG or ~/.mtslake (JSON),
     ≙ CONFIG_PATH = ~/.mtscomp."""

@@ -40,6 +40,8 @@ def _spread(docs: DataFrame, *cols) -> DataFrame:
     re-shuffles its input either). Projecting FIRST keeps any needed
     spread to exactly the consumed columns."""
     narrow = docs.select(*cols)
+    # cores, not config.session_width: this spread is conditional and
+    # only lifts a too-few-splits scan to one task per core
     par = docs.sparkSession.sparkContext.defaultParallelism
     if narrow.rdd.getNumPartitions() < par:
         narrow = narrow.repartition(par)
@@ -64,26 +66,33 @@ def _tokens(text_col: str) -> F.Column:
 def shingles(text_col: str = "text", k: int = 3) -> F.Column:
     """Distinct word k-shingles, JVM-side.
 
-    Built by ``k−1`` chained ``zip_with`` passes over shifted views of
-    the token array (element i concatenates toks[i..i+k−1]), then
-    trimmed to the first ``max(size−k+1, 1)`` entries. Semantically
-    identical to the older per-index ``transform(sequence, slice)``
-    form — zip_with pads the shorter side with NULL and concat_ws
-    skips NULLs, so the short-document (< k tokens) shingle is the
-    same partial join, and first-occurrence order (hence
-    array_distinct output) is unchanged — but ~5× cheaper: O(k) array
-    passes instead of O(n) per-element slice allocations, measured
-    2.96 s → 0.61 s single-core over 5 000 docs (these higher-order
-    functions are interpreted, not codegen'd, so per-element
-    expression overhead dominates)."""
+    ``shingle_windows`` trimmed to the first ``max(size−k+1, 1)``
+    entries, so a short document (< k tokens) keeps one shingle: the
+    partial join of all its tokens. Semantically identical to the
+    older per-index ``transform(sequence, slice)`` form,
+    first-occurrence order (hence array_distinct output) included,
+    but ~5× cheaper: O(k) array passes instead of O(n) per-element
+    slice allocations, measured 2.96 s → 0.61 s single-core over
+    5 000 docs (these higher-order functions are interpreted, not
+    codegen'd, so per-element expression overhead dominates)."""
     toks = _tokens(text_col)
+    n = F.greatest(F.size(toks) - (k - 1), F.lit(1))
+    return F.array_distinct(F.slice(shingle_windows(toks, k), 1, n))
+
+
+def shingle_windows(toks, k: int) -> F.Column:
+    """Element i joins ``toks[i..i+k−1]`` with single spaces, built by
+    ``k−1`` chained ``zip_with`` passes over shifted views of the token
+    array. zip_with pads the shorter side with NULL and concat_ws skips
+    NULLs, so the last k−1 elements are partial joins: callers keep the
+    first ``size−k+1`` full windows and pick their own short-document
+    rule."""
     size = F.size(toks)
-    n = F.greatest(size - (k - 1), F.lit(1))
     acc = toks
     for j in range(1, k):
         nxt = F.slice(toks, j + 1, F.greatest(size - j, F.lit(0)))
         acc = F.zip_with(acc, nxt, lambda a, b: F.concat_ws(" ", a, b))
-    return F.array_distinct(F.slice(acc, 1, n))
+    return acc
 
 
 def minhash_signature(shingle_col, n_hashes: int = 64) -> F.Column:

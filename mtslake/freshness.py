@@ -44,6 +44,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, Window, functions as F
 
+from .dedup import shingle_windows
+
 US_PER_S = 1_000_000
 
 
@@ -155,11 +157,9 @@ def _shingles(tokens, k: int):
     the empty set — guarded explicitly, because Spark's
     ``sequence(1, n-k+1)`` runs DESCENDING (not empty) when n < k.
 
-    Built as k−1 chained ``zip_with`` passes over shifted views of the
-    token array (the dedup.shingles construction — O(k) array passes
-    instead of one interpreted slice+concat allocation PER ELEMENT,
-    measured ~5× cheaper there): element i of the accumulator joins
-    tokens[i..i+k−1]; the slice keeps only the n−k+1 full windows, so
+    Built on ``dedup.shingle_windows`` (O(k) array passes instead of
+    one interpreted slice+concat allocation PER ELEMENT, measured ~5×
+    cheaper there); the slice keeps only the n−k+1 full windows, so
     with the size≥k guard the output is identical to the older
     ``transform(sequence, slice)`` form, first-occurrence order (hence
     array_distinct output) included.
@@ -167,13 +167,10 @@ def _shingles(tokens, k: int):
     if k == 1:
         return F.array_distinct(tokens)
     size = F.size(tokens)
-    acc = tokens
-    for j in range(1, k):
-        nxt = F.slice(tokens, j + 1, F.greatest(size - j, F.lit(0)))
-        acc = F.zip_with(acc, nxt, lambda a, b: F.concat_ws(" ", a, b))
+    windows = shingle_windows(tokens, k)
     return F.when(
         size >= k,
-        F.array_distinct(F.slice(acc, 1, size - F.lit(k - 1))),
+        F.array_distinct(F.slice(windows, 1, size - F.lit(k - 1))),
     ).otherwise(F.array().cast("array<string>"))
 
 

@@ -27,6 +27,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, functions as F
 from pyspark.sql import types as T
 
+from .config import session_width
+
 MEDIA_SCHEMA = T.StructType(
     [
         T.StructField("media_id", T.LongType(), False),
@@ -69,12 +71,7 @@ def _spread(df: DataFrame) -> DataFrame:
     the binary interop scans (sources.py). An explicit-N repartition
     is exempt from AQE coalescing; every kernel here is per-row
     deterministic, so outputs are partitioning-invariant."""
-    sess = df.sparkSession
-    try:
-        n = int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        n = sess.sparkContext.defaultParallelism
-    return df.repartition(n)
+    return df.repartition(session_width(df.sparkSession))
 
 
 _STUBBED = True  # audio/video decode needs libs absent from this container

@@ -33,6 +33,8 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession, functions as F
 from pyspark.sql import types as T
 
+from .config import session_width
+
 MELT_SCHEMA = T.StructType(
     [
         T.StructField("sample", T.LongType(), False),
@@ -45,19 +47,6 @@ MELT_SCHEMA = T.StructType(
 def read_ch_meta(ch_path: str) -> dict:
     with open(ch_path) as f:
         return json.load(f)
-
-
-def _scan_parallelism(plan: DataFrame) -> int:
-    """Partition count for a scan-plan exchange feeding a Python
-    decode stage: the session's shuffle width (what the cluster tuned),
-    pinned explicitly so AQE cannot coalesce the metadata-sized plan
-    frame below the downstream stage's real (per-row-expensive)
-    parallelism."""
-    sess = plan.sparkSession
-    try:
-        return int(sess.conf.get("spark.sql.shuffle.partitions"))
-    except (TypeError, ValueError):
-        return sess.sparkContext.defaultParallelism
 
 
 def read_cbin(spark: SparkSession, cbin_path: str, ch_path: str) -> DataFrame:
@@ -126,7 +115,7 @@ def read_cbin(spark: SparkSession, cbin_path: str, ch_path: str) -> DataFrame:
     # per-chunk file decode (Python, I/O + numpy), so AQE must not
     # byte-size-coalesce the tiny plan frame into one serial task (the
     # compress_series lesson, chunk.py)
-    n_part = _scan_parallelism(plan)
+    n_part = session_width(spark)
     return plan.repartition(n_part, "chunk_idx").mapInPandas(
         decode, schema=MELT_SCHEMA
     )
@@ -275,7 +264,7 @@ def read_raw_bin(
         finally:
             os.close(fd)
 
-    n_part = _scan_parallelism(plan)  # see read_cbin: no AQE collapse
+    n_part = session_width(spark)  # see read_cbin: no AQE collapse
     return plan.repartition(n_part, "s0").mapInPandas(
         scan, schema=MELT_SCHEMA
     )

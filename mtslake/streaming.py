@@ -178,12 +178,13 @@ def streaming_compress(
     the streaming sibling of ``chunk.compress_series``.
 
     Per-url ``GroupState`` buffers raw points; once the event-time
-    watermark passes a chunk's end boundary the chunk is *sealed* with
-    the exact batch codec (``chunk._encode_block``), so a sealed
-    streaming chunk is **bit-identical** — payloads, sha1, stats — to
-    what the batch path would produce for the same points (the
-    streaming analogue of the reference's ordered chunk writer,
-    mtscomp.py:425-507, where "closed" was implicit in file order).
+    watermark passes a chunk's end boundary the chunk is *sealed* by
+    the one Arrow encode kernel ``compress_series`` runs
+    (``chunk._encode_block``), so a sealed streaming chunk is
+    **bit-identical** — payloads, sha1, stats — to what the batch path
+    would produce for the same points (the streaming analogue of the
+    reference's ordered chunk writer, mtscomp.py:425-507, where
+    "closed" was implicit in file order).
 
     An event-time timeout is armed at the earliest open chunk's end
     boundary, so urls that stop receiving data still flush as the
@@ -222,10 +223,13 @@ def streaming_compress(
     unordered table; only the segment-boundary alignment with batch is
     best-effort above the bound).
     """
+    import numpy as np
     import pandas as pd
+    import pyarrow as pa
     from pyspark.sql.streaming.state import GroupStateTimeout
 
     from . import chunk as chunk_mod
+    from .chunk import SHA1_W
     from .series import TS_COL
 
     if late_policy not in ("seal", "drop"):
@@ -315,15 +319,28 @@ def streaming_compress(
         else:
             state.remove()
         if len(closed):
-            blk = closed.copy()
-            blk["url"] = url
+            n = len(closed)
+            if (closed["text_sha1"].str.len() != 2 * SHA1_W).any():
+                raise ValueError(
+                    f"text_sha1 of {url} is not {2 * SHA1_W} hex chars"
+                )
+            # the batch kernel's input layout: digests cross as raw
+            # 20-byte binary (what compress_series' F.unhex produces)
+            t = pa.table({
+                "url": pa.repeat(url, n),
+                "lang": pa.array(closed["lang"], type=pa.string()),
+                TS_COL: closed[TS_COL].to_numpy(np.int64),
+                "n_chars": closed["n_chars"].to_numpy(np.int64),
+                "value": closed["value"].to_numpy(np.float64),
+                "text_sha1": chunk_mod._fixed_width_array(
+                    bytes.fromhex("".join(closed["text_sha1"])), n,
+                    SHA1_W, False,
+                ),
+            })
             yield chunk_mod._encode_block(
-                blk[["url", "chunk_id", "lang", TS_COL,
-                     "n_chars", "value", "text_sha1"]],
-                cfg.hot_chunk_points,
-                cfg.comp_level,
+                t, dur, cfg.hot_chunk_points, cfg.comp_level,
                 cfg.do_time_diff,
-            )
+            ).to_pandas()
 
     return with_ts.groupBy("url").applyInPandasWithState(
         seal,

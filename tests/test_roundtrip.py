@@ -321,6 +321,24 @@ def test_generic_channel_spec_randomized_property(spark):
         assert got == want, (trial, spec)
 
 
+def test_binary_channel_rejects_wrong_width_values(spark):
+    """A fixed-width binary channel must reject any value of another
+    width. The byte TOTAL here is right (3 + 5 = 2 × 4), so a
+    total-only check would encode the rows as b"abcd"/b"efgh" and
+    silently corrupt both."""
+    from mtslake.chunk import ChannelSpec, compress_series
+
+    spec = (ChannelSpec("tag", width=4),)
+    series = spark.createDataFrame(
+        [("https://a.example.com/", "en", 1, b"abc"),
+         ("https://a.example.com/", "en", 2, b"defgh")],
+        "url string, lang string, ts_us long, tag binary",
+    )
+    with pytest.raises(Exception, match="binary channel tag is not "
+                                        "fixed-width 4"):
+        compress_series(series, DEFAULT, channels=spec).collect()
+
+
 def test_read_range_pins_store_layout_for_pruning(spark, tmp_path):
     """Regression: read_range pruned chunk_id with the CALLER's cfg
     (default DEFAULT), so a store written with a non-default

@@ -1,5 +1,7 @@
 """Reference-format interop: distributed .cbin/.ch read + write, raw
-binary scan, npy scan — cross-checked against the reference itself."""
+binary scan, npy scan — cross-checked against the reference itself
+when it imports, else against the independent format twin
+(tests/cbin_twin.py), so every assertion runs on every host."""
 
 import sys
 import types
@@ -17,7 +19,10 @@ def _ref():
         t.tqdm = lambda it=None, **k: it
         sys.modules["tqdm"] = t
     sys.path.insert(0, "/root/reference")
-    import mtscomp
+    try:
+        import mtscomp
+    except ImportError:
+        import cbin_twin as mtscomp
 
     return mtscomp
 
