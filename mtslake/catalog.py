@@ -59,13 +59,23 @@ class ChunkStore:
       chunks/        compressed chunk rows, partitioned by chunk_id
       catalog/       per-chunk stats (the .ch analogue)
       rollup_1m|1h|1d/  continuous-aggregate tiers
-      checkpoints/   processed-partition manifests (resume)
-      lineage/       per-partition metrics rows
+      lineage/       per-unit metrics rows; a unit's row is its
+                     resumable-job done marker
+      checkpoints/   legacy done markers of older stores (read on
+                     resume, no longer written)
+
+    Tables are read through ``table(name)``, which reuses one opened
+    DataFrame per table while the table's files are unchanged.
     """
+
+    # per-table read options: lineage files span the wall_ms →
+    # batch_wall_ms rename, so their schemas are merged on read
+    READ_OPTIONS = {"lineage": {"mergeSchema": "true"}}
 
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
+        self._tables: dict = {}  # name -> (file listing, DataFrame)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -231,11 +241,55 @@ class ChunkStore:
 
     # -- read -------------------------------------------------------------
 
+    def _listing(self, name: str) -> frozenset:
+        """(relative path, size, mtime_ns) of every file Spark would
+        read under the table: ``_``/``.`` names are skipped, as Spark's
+        own listing skips them (``_SUCCESS``, ``.crc``, ``_temporary``)."""
+        root = self.path(name)
+        out = []
+        for dirpath, dirs, files in os.walk(root):
+            dirs[:] = [d for d in dirs if not d.startswith(("_", "."))]
+            for f in files:
+                if f.startswith(("_", ".")):
+                    continue
+                p = os.path.join(dirpath, f)
+                try:
+                    st = os.stat(p)
+                except FileNotFoundError:  # removed while walking
+                    continue
+                out.append((os.path.relpath(p, root), st.st_size,
+                            st.st_mtime_ns))
+        return frozenset(out)
+
+    def table(self, name: str) -> DataFrame:
+        """The store table ``name`` as a DataFrame, opened once and
+        reused while its files are unchanged.
+
+        Opening a partitioned table costs Spark a listing job (past 32
+        partition directories the listing itself runs as a job) and a
+        schema-inference job; a dashboard read pays both before any
+        data moves. The handle keeps the opened plan and its file
+        listing, and a driver-side walk checks on every call that the
+        same files (relative path, size, mtime_ns) are still there. Any
+        difference — an append, a dropped partition, a file rewritten
+        in place — reopens through Spark, so a reader never scans a
+        stale file set. Nothing is cached but the plan; the walk is
+        O(files) like Spark's own listing, but runs no Spark job."""
+        files = self._listing(name)
+        hit = self._tables.get(name)
+        if hit is not None and hit[0] == files:
+            return hit[1]
+        df = self.spark.read.options(
+            **self.READ_OPTIONS.get(name, {})
+        ).parquet(self.path(name))
+        self._tables[name] = (files, df)
+        return df
+
     def chunks(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("chunks"))
+        return self.table("chunks")
 
     def catalog(self) -> DataFrame:
-        return self.spark.read.parquet(self.path("catalog"))
+        return self.table("catalog")
 
     def has(self, name: str) -> bool:
         p = self.path(name)
@@ -265,15 +319,7 @@ class ChunkStore:
 
     def _data_files(self, name: str) -> list[str]:
         """Sorted relative paths of the table's current data files."""
-        root = self.path(name)
-        out = []
-        for dirpath, _, files in os.walk(root):
-            for f in files:
-                if f.startswith("part-") and not f.endswith(".crc"):
-                    out.append(
-                        os.path.relpath(os.path.join(dirpath, f), root)
-                    )
-        return sorted(out)
+        return sorted(rel for rel, _, _ in self._listing(name))
 
     def commit_snapshot(self, operation: str = "append") -> int:
         """Freeze the current table state as snapshot N (monotonic)."""
@@ -492,7 +538,6 @@ def register_views(store: "ChunkStore", prefix: str = "mtslake") -> list[str]:
                 "rollup_1d", "pages", "lineage"):
         if store.has(tbl):
             view = f"{prefix}_{tbl}"
-            store.spark.read.parquet(store.path(tbl)) \
-                .createOrReplaceTempView(view)
+            store.table(tbl).createOrReplaceTempView(view)
             names.append(view)
     return names

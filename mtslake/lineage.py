@@ -12,9 +12,14 @@ unit the job writes:
   batch_wall_ms, units_in_batch) — ≙ the reference's per-chunk ratio
   logging (mtscomp.py:490-492) promoted to a queryable table; stores
   written before the batch_wall_ms rename (one wall_ms per unit) are
-  read back schema-merged with wall_ms coalesced in;
-* a **checkpoint row** marking the unit done — the .ch-style manifest
-  reborn as a snapshot log; resume = anti-join(all units, done units).
+  read back schema-merged with wall_ms coalesced in.
+
+The lineage row is also the unit's **done marker** — the .ch-style
+manifest reborn as a snapshot log; resume = anti-join(all units, done
+units). One append per batch marks its units done together with their
+metrics, so no crash can leave a unit done without its lineage row.
+Stores written before this layout also carry a ``checkpoints/`` table
+of (job_id, unit) rows; resume still reads it.
 
 The driver loop iterates over partition units (metadata-scale), never
 over rows — each unit is one distributed Spark job.
@@ -23,6 +28,7 @@ over rows — each unit is one distributed Spark job.
 from __future__ import annotations
 
 import time
+from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -58,27 +64,32 @@ class ResumableCompressJob:
         # are at store.path("chunks") when it runs.
         self.before_check = before_check or (lambda job: None)
 
-    # -- checkpoint manifest ------------------------------------------------
+    # -- done markers -----------------------------------------------------
 
     def done_units(self) -> set[int]:
-        if not self.store.has("checkpoints"):
+        marks = [
+            self.store.table(t).select("job_id", "unit")
+            for t in ("lineage", "checkpoints") if self.store.has(t)
+        ]
+        if not marks:
             return set()
-        df = self.spark.read.parquet(self.store.path("checkpoints"))
         return {
             r[0]
-            for r in df.filter(F.col("job_id") == self.job_id)
+            for r in reduce(DataFrame.unionByName, marks)
+            .filter(F.col("job_id") == self.job_id)
             .select("unit")
             .distinct()
             .collect()
         }
 
-    def _mark_done(self, units: list[int], meta: list[dict]) -> None:
-        ck = self.spark.createDataFrame(
-            [(self.job_id, int(u)) for u in units], "job_id string, unit long"
-        )
-        ck.write.mode("append").parquet(self.store.path("checkpoints"))
+    def _mark_done(self, meta: list[dict]) -> None:
+        """Append the batch's lineage rows as one file: the rows are
+        the units' done markers (see the module docstring). The rows
+        are parallelized into one slice; a ``coalesce(1)`` over the
+        default slices costs twice the write (measured 1.1 s vs
+        0.45 s on 4 cores)."""
         ln = self.spark.createDataFrame(
-            [
+            self.spark.sparkContext.parallelize([
                 (
                     self.job_id, int(m["unit"]), int(m["n_chunks"]),
                     int(m["n_points"]), int(m["raw_nbytes"]),
@@ -86,7 +97,7 @@ class ResumableCompressJob:
                     int(m["batch_wall_ms"]), int(m["units_in_batch"]),
                 )
                 for m in meta
-            ],
+            ], 1),
             "job_id string, unit long, n_chunks long, n_points long, "
             "raw_nbytes long, comp_nbytes long, ratio double, "
             # wall time is measured ONCE per batch (the write is one
@@ -213,7 +224,7 @@ class ResumableCompressJob:
                 }
                 for r in stats
             ]
-            self._mark_done(batch, meta)
+            self._mark_done(meta)
             n_done += len(batch)
         return {
             "job_id": self.job_id,
@@ -223,13 +234,12 @@ class ResumableCompressJob:
         }
 
     def lineage(self) -> DataFrame:
-        # mergeSchema: a store resumed across the wall_ms →
-        # batch_wall_ms rename holds files of both schemas in one
-        # directory; a plain read would take whichever file Spark
-        # happens to infer from and silently drop the other's column.
-        ln = self.spark.read.option("mergeSchema", "true").parquet(
-            self.store.path("lineage")
-        )
+        # the store reads lineage schema-merged (ChunkStore.READ_OPTIONS):
+        # a store resumed across the wall_ms → batch_wall_ms rename
+        # holds files of both schemas in one directory; a plain read
+        # would take whichever file Spark happens to infer from and
+        # silently drop the other's column.
+        ln = self.store.table("lineage")
         cols = set(ln.columns)
         if "wall_ms" in cols:
             # legacy rows recorded one wall per UNIT (units_in_batch=1)

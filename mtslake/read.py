@@ -2,13 +2,15 @@
 
     read_range(store, t0, t1, url?) =
         prune chunks on [ts_min, ts_max] overlap   (≙ bisect, :661-684)
-        → mapInPandas(decode)                      (≙ read_chunk, :602-635)
+        → mapInArrow(decode)                       (≙ read_chunk, :602-635)
         → filter ts BETWEEN t0 AND t1              (≙ trim, :828-833)
 
 "Concatenate then trim" becomes union-of-chunk-decodes + WHERE — and the
 pruning is pushed into the Parquet scan (partition + row-group stats),
 so unneeded chunks are never read, the property the reference asserts at
-mtscomp.py:674,681.
+mtscomp.py:674,681. A read of one url across several chunk partitions
+first resolves the url's own chunk_ids, so the decode scans only the
+partitions that hold its chunks.
 """
 
 from __future__ import annotations
@@ -17,6 +19,7 @@ from pyspark.sql import DataFrame, functions as F
 
 from .catalog import ChunkStore, prune_chunks, prune_chunks_by_value
 from .chunk import decompress_chunks
+from .compact import id_range_predicate
 from .config import EngineConfig, DEFAULT
 from .series import TS_COL
 
@@ -54,6 +57,20 @@ def read_range(
     channel_range = channel_range or {}
     for ch, (lo, hi) in channel_range.items():
         pruned = prune_chunks_by_value(pruned, ch, lo, hi)
+    dur = cfg.chunk_duration_us
+    if url is not None and (
+        t0_us is None or t1_us is None
+        or int(t0_us) // dur != int(t1_us) // dur
+    ):
+        # one url across several chunk partitions: the url filter
+        # prunes only row groups, so the decode would scan every
+        # partition in the window. Resolve the url's chunk_ids first —
+        # one JVM-only job over the chunk rows' key columns (not the
+        # catalog, which can lag the chunks table by a crashed batch) —
+        # and scan just those partitions. An absent url resolves to no
+        # partitions and an empty frame.
+        ids = [r[0] for r in pruned.select("chunk_id").collect()]
+        pruned = pruned.filter(id_range_predicate("chunk_id", ids))
     # channel projection (≙ r[:, cols], mtscomp.py:835-842) is pushed
     # INTO the decode: unrequested payload columns are never read from
     # Parquet nor decoded (the reference decodes whole chunks first)
@@ -86,23 +103,3 @@ def read_range(
             decoded = decoded.filter(F.col(ch) <= hi)
     return decoded.select("url", "lang", TS_COL, *requested)
 
-
-def read_step(
-    store: ChunkStore,
-    step: int,
-    t0_us: int | None = None,
-    t1_us: int | None = None,
-    url: str | None = None,
-    cfg: EngineConfig = DEFAULT,
-) -> DataFrame:
-    """Strided read (≙ slice step, mtscomp.py:828-833): every step-th
-    point per url by row position within the range."""
-    from pyspark.sql import Window as W
-
-    base = read_range(store, t0_us, t1_us, url=url, cfg=cfg)
-    w = W.partitionBy("url").orderBy(TS_COL, "text_sha1")
-    return (
-        base.withColumn("_rn", F.row_number().over(w) - 1)
-        .filter(F.pmod(F.col("_rn"), F.lit(step)) == 0)
-        .drop("_rn")
-    )

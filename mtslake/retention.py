@@ -143,7 +143,7 @@ def apply_retention(
         stats[f"{tier}_partitions"] = doomed
         # one count over ONLY the partitions being dropped (pruned scan)
         stats[f"{tier}_rows_expired"] = (
-            store.spark.read.parquet(store.path(name))
+            store.table(name)
             .filter(F.col("part_id").isin(doomed)).count()
         )
         stats[f"{tier}_partitions_dropped"] = len(doomed)

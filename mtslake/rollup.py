@@ -32,7 +32,7 @@ Two exactness decisions:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, functions as F
+from pyspark.sql import DataFrame, Observation, functions as F
 
 from .config import TIER_US
 from .series import TS_COL, url_prefix
@@ -283,9 +283,9 @@ def refresh_tiers(store, chunk_ids, cfg=None) -> dict:
         finer_parts = _affected_parts(
             parts, ROLLUP_PART_US[tier], ROLLUP_PART_US[finer]
         )
-        lower = store.spark.read.parquet(
-            store.path(f"rollup_{finer}")
-        ).filter(id_range_predicate("part_id", finer_parts))
+        lower = store.table(f"rollup_{finer}").filter(
+            id_range_predicate("part_id", finer_parts)
+        )
         out = with_part_id(rollup_from_tier(lower, tier), tier).filter(
             id_range_predicate("part_id", parts)
         )
@@ -301,27 +301,24 @@ def _overwrite_parts(store, rolled_with_part: DataFrame, tier: str,
     overwrite only replaces partitions present in the written frame, so
     a refreshed window whose recompute yields zero rows (compaction or
     retention removed its raw data) would otherwise leave its stale
-    rollup partition on disk forever."""
+    rollup partition on disk forever. The written part_ids are observed
+    by the write itself — no cache, no second pass over the frame."""
     import os
     import shutil
 
-    rolled_with_part = rolled_with_part.persist()
-    try:
-        present = {
-            int(r[0])
-            for r in rolled_with_part.select("part_id").distinct().collect()
-        }
-        rolled_with_part.write.mode("overwrite").option(
-            "partitionOverwriteMode", "dynamic"
-        ).partitionBy("part_id").parquet(store.path(f"rollup_{tier}"))
-        for p in affected_parts:
-            if int(p) in present:
-                continue
-            d = os.path.join(store.path(f"rollup_{tier}"), f"part_id={p}")
-            if os.path.isdir(d):
-                shutil.rmtree(d)
-    finally:
-        rolled_with_part.unpersist()
+    written = Observation()
+    rolled_with_part.observe(
+        written, F.collect_set("part_id").alias("parts")
+    ).write.mode("overwrite").option(
+        "partitionOverwriteMode", "dynamic"
+    ).partitionBy("part_id").parquet(store.path(f"rollup_{tier}"))
+    present = {int(p) for p in written.get["parts"]}
+    for p in affected_parts:
+        if int(p) in present:
+            continue
+        d = os.path.join(store.path(f"rollup_{tier}"), f"part_id={p}")
+        if os.path.isdir(d):
+            shutil.rmtree(d)
     store.spark.catalog.refreshByPath(store.path(f"rollup_{tier}"))
 
 
@@ -345,9 +342,7 @@ def materialize_tiers(store, series: DataFrame) -> None:
     unchanged (pytest asserts 1d(1h(1m)) ≡ direct aggregation)."""
     _write_tier(store, rollup_from_series(series, "1m"), "1m")
     for tier in ("1h", "1d"):
-        lower = store.spark.read.parquet(
-            store.path(f"rollup_{TIER_BELOW[tier]}")
-        )
+        lower = store.table(f"rollup_{TIER_BELOW[tier]}")
         _write_tier(store, rollup_from_tier(lower, tier), tier)
 
 

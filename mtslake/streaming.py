@@ -421,7 +421,7 @@ def record_late_drops(store, query, job_id: str = "stream",
     acc_recorded = 0
     if store.has("lineage_stream"):
         prior = (
-            store.spark.read.parquet(store.path("lineage_stream"))
+            store.table("lineage_stream")
             .filter(F.col("job_id") == job_id)
             .groupBy("batch_id")
             .agg(F.sum("rows_dropped_late").alias("n"))

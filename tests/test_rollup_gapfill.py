@@ -1,5 +1,7 @@
 """Rollup tier-equality, LOCF gap-fill, retention, checkpoint-resume."""
 
+import os
+
 import pytest
 from pyspark.sql import functions as F
 
@@ -143,6 +145,64 @@ def test_checkpoint_resume_idempotent(spark, series, tmp_path):
     assert read.read_range(st).count() == series.count()
     # lineage covers every unit
     assert job.lineage().select("unit").distinct().count() == res["units_total"]
+
+
+def _parquet_files(root):
+    import os
+    return [f for _, _, fs in os.walk(root) for f in fs
+            if f.startswith("part-") and f.endswith(".parquet")]
+
+
+def test_resume_reads_legacy_checkpoints_table(spark, series, tmp_path):
+    """Stores written before the lineage row became the done marker
+    keep their done units in ``checkpoints/``: resume still skips them.
+    A current run writes no checkpoints table and one lineage file per
+    batch."""
+    import shutil
+
+    st = ChunkStore(spark, str(tmp_path / "legacy"))
+    job = ResumableCompressJob(st, "job-l", units_per_batch=2)
+    with pytest.raises(RuntimeError, match="simulated"):
+        job.run(series, fail_after_batches=2)
+    assert not os.path.exists(st.path("checkpoints"))
+    assert len(_parquet_files(st.path("lineage"))) == 2
+    done = job.done_units()
+    assert len(done) == 4
+    # rewrite the store into the legacy layout: done markers in
+    # checkpoints/, no lineage rows for them
+    spark.createDataFrame(
+        [("job-l", int(u)) for u in done], "job_id string, unit long"
+    ).write.parquet(st.path("checkpoints"))
+    shutil.rmtree(st.path("lineage"))
+    assert job.done_units() == done
+    res = job.run(series)
+    assert res["units_already_done"] == len(done)
+    assert res["units_processed"] == res["units_total"] - len(done)
+    assert job.done_units() == set(job.plan_units(series))
+    got = {tuple(r) for r in read.read_range(st).select(
+        "url", TS_COL, "value").collect()}
+    assert got == {tuple(r) for r in series.select(
+        "url", TS_COL, "value").collect()}
+
+
+def test_lineage_row_alone_marks_unit_done(spark, series, tmp_path):
+    """A unit with a lineage row (and no checkpoints table) is done:
+    the lineage append is the one done marker, so a crash can never
+    leave a unit marked done without its lineage row."""
+    st = ChunkStore(spark, str(tmp_path / "ln_only"))
+    job = ResumableCompressJob(st, "job-m")
+    units = job.plan_units(series)
+    spark.createDataFrame(
+        [("job-m", int(units[0]), 1, 1, 1, 1, 1.0, 1, 1),
+         ("other", int(units[1]), 1, 1, 1, 1, 1.0, 1, 1)],
+        "job_id string, unit long, n_chunks long, n_points long, "
+        "raw_nbytes long, comp_nbytes long, ratio double, "
+        "batch_wall_ms long, units_in_batch long",
+    ).write.parquet(st.path("lineage"))
+    assert job.done_units() == {units[0]}
+    res = job.run(series)
+    assert res["units_already_done"] == 1
+    assert res["units_processed"] == len(units) - 1
 
 
 def _file_state(root):
