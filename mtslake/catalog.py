@@ -61,21 +61,15 @@ class ChunkStore:
       rollup_1m|1h|1d/  continuous-aggregate tiers
       lineage/       per-unit metrics rows; a unit's row is its
                      resumable-job done marker
-      checkpoints/   legacy done markers of older stores (read on
-                     resume, no longer written)
 
     Tables are read through ``table(name)``, which reuses one opened
     DataFrame per table while the table's files are unchanged.
     """
 
-    # per-table read options: lineage files span the wall_ms →
-    # batch_wall_ms rename, so their schemas are merged on read
-    READ_OPTIONS = {"lineage": {"mergeSchema": "true"}}
-
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._tables: dict = {}  # name -> (file listing, DataFrame)
+        self._tables: dict = {}  # (name, options) -> (files, DataFrame)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -261,9 +255,10 @@ class ChunkStore:
                             st.st_mtime_ns))
         return frozenset(out)
 
-    def table(self, name: str) -> DataFrame:
-        """The store table ``name`` as a DataFrame, opened once and
-        reused while its files are unchanged.
+    def table(self, name: str, **options: str) -> DataFrame:
+        """The store table ``name`` as a DataFrame, read with the given
+        Parquet ``options``, opened once and reused while its files are
+        unchanged.
 
         Opening a partitioned table costs Spark a listing job (past 32
         partition directories the listing itself runs as a job) and a
@@ -275,14 +270,13 @@ class ChunkStore:
         in place — reopens through Spark, so a reader never scans a
         stale file set. Nothing is cached but the plan; the walk is
         O(files) like Spark's own listing, but runs no Spark job."""
+        key = (name, tuple(sorted(options.items())))
         files = self._listing(name)
-        hit = self._tables.get(name)
+        hit = self._tables.get(key)
         if hit is not None and hit[0] == files:
             return hit[1]
-        df = self.spark.read.options(
-            **self.READ_OPTIONS.get(name, {})
-        ).parquet(self.path(name))
-        self._tables[name] = (files, df)
+        df = self.spark.read.options(**options).parquet(self.path(name))
+        self._tables[key] = (files, df)
         return df
 
     def chunks(self) -> DataFrame:

@@ -18,8 +18,9 @@ The lineage row is also the unit's **done marker** — the .ch-style
 manifest reborn as a snapshot log; resume = anti-join(all units, done
 units). One append per batch marks its units done together with their
 metrics, so no crash can leave a unit done without its lineage row.
-Stores written before this layout also carry a ``checkpoints/`` table
-of (job_id, unit) rows; resume still reads it.
+A ``checkpoints/`` table left by older versions is not read: a unit it
+marks done without a lineage row is one such crash cut short, and
+resume recompresses it (idempotent, above) and writes its row.
 
 The driver loop iterates over partition units (metadata-scale), never
 over rows — each unit is one distributed Spark job.
@@ -28,7 +29,6 @@ over rows — each unit is one distributed Spark job.
 from __future__ import annotations
 
 import time
-from functools import reduce
 
 from pyspark.sql import DataFrame, functions as F
 
@@ -67,15 +67,11 @@ class ResumableCompressJob:
     # -- done markers -----------------------------------------------------
 
     def done_units(self) -> set[int]:
-        marks = [
-            self.store.table(t).select("job_id", "unit")
-            for t in ("lineage", "checkpoints") if self.store.has(t)
-        ]
-        if not marks:
+        if not self.store.has("lineage"):
             return set()
         return {
             r[0]
-            for r in reduce(DataFrame.unionByName, marks)
+            for r in self.store.table("lineage")
             .filter(F.col("job_id") == self.job_id)
             .select("unit")
             .distinct()
@@ -234,12 +230,11 @@ class ResumableCompressJob:
         }
 
     def lineage(self) -> DataFrame:
-        # the store reads lineage schema-merged (ChunkStore.READ_OPTIONS):
-        # a store resumed across the wall_ms → batch_wall_ms rename
-        # holds files of both schemas in one directory; a plain read
-        # would take whichever file Spark happens to infer from and
-        # silently drop the other's column.
-        ln = self.store.table("lineage")
+        # mergeSchema: a store resumed across the wall_ms →
+        # batch_wall_ms rename holds files of both schemas in one
+        # directory; a plain read would take whichever file Spark
+        # happens to infer from and silently drop the other's column.
+        ln = self.store.table("lineage", mergeSchema="true")
         cols = set(ln.columns)
         if "wall_ms" in cols:
             # legacy rows recorded one wall per UNIT (units_in_batch=1)

@@ -8,9 +8,9 @@
 "Concatenate then trim" becomes union-of-chunk-decodes + WHERE — and the
 pruning is pushed into the Parquet scan (partition + row-group stats),
 so unneeded chunks are never read, the property the reference asserts at
-mtscomp.py:674,681. A read of one url across several chunk partitions
-first resolves the url's own chunk_ids, so the decode scans only the
-partitions that hold its chunks.
+mtscomp.py:674,681. A read of one url decodes on one task (≙ one
+Reader per file): its few chunk rows would otherwise be spread over a
+Python task per scan split, most of which decode nothing.
 """
 
 from __future__ import annotations
@@ -19,7 +19,6 @@ from pyspark.sql import DataFrame, functions as F
 
 from .catalog import ChunkStore, prune_chunks, prune_chunks_by_value
 from .chunk import decompress_chunks
-from .compact import id_range_predicate
 from .config import EngineConfig, DEFAULT
 from .series import TS_COL
 
@@ -57,20 +56,15 @@ def read_range(
     channel_range = channel_range or {}
     for ch, (lo, hi) in channel_range.items():
         pruned = prune_chunks_by_value(pruned, ch, lo, hi)
-    dur = cfg.chunk_duration_us
-    if url is not None and (
-        t0_us is None or t1_us is None
-        or int(t0_us) // dur != int(t1_us) // dur
-    ):
-        # one url across several chunk partitions: the url filter
-        # prunes only row groups, so the decode would scan every
-        # partition in the window. Resolve the url's chunk_ids first —
-        # one JVM-only job over the chunk rows' key columns (not the
-        # catalog, which can lag the chunks table by a crashed batch) —
-        # and scan just those partitions. An absent url resolves to no
-        # partitions and an empty frame.
-        ids = [r[0] for r in pruned.select("chunk_id").collect()]
-        pruned = pruned.filter(id_range_predicate("chunk_id", ids))
+    if url is not None:
+        # one url's chunk rows are one series, a handful of rows: the
+        # scan's splits (one per few files across the whole window)
+        # would each start a Python decode task, nearly all of them on
+        # zero rows. One task opens the window's files (JVM-side, with
+        # the url filter pushed into the scan) and decodes the url's
+        # rows; a consumer grouping by url (LTTB, gap-fill) then needs
+        # no shuffle either.
+        pruned = pruned.coalesce(1)
     # channel projection (≙ r[:, cols], mtscomp.py:835-842) is pushed
     # INTO the decode: unrequested payload columns are never read from
     # Parquet nor decoded (the reference decodes whole chunks first)

@@ -54,27 +54,17 @@ def test_channel_projection_prunes_payload_columns(store):
     assert "p_value" not in cplan and "p_ts" not in cplan
 
 
-def test_url_read_scans_only_resolved_partitions(store):
-    """An unbounded one-url read resolves the url's chunk_ids first:
-    the decode scan carries them as chunk_id range PartitionFilters
-    (without the resolution it has no partition filter at all)."""
-    from mtslake.compact import id_range_predicate
-
+def test_url_read_decodes_on_one_task(store):
+    """A one-url read coalesces its scan into one task before the
+    decode, shuffle-free, while the same read without a url spreads
+    over the scan's splits."""
     url = store.chunks().select("url").orderBy("url").first()[0]
-    ids = sorted({
-        r[0] for r in store.chunks().filter(F.col("url") == url)
-        .select("chunk_id").collect()
-    })
-    plan = read.read_range(store, url=url)._jdf.queryExecution() \
-        .executedPlan().toString()
-    assert "PartitionFilters: []" not in plan
-    scan = plan[plan.index("PartitionFilters: ["):]
-    scan = scan[:scan.index("]") + 1]
-    want = store.chunks().filter(id_range_predicate("chunk_id", ids)) \
-        ._jdf.queryExecution().executedPlan().toString()
-    want = want[want.index("PartitionFilters: ["):]
-    assert scan == want[:want.index("]") + 1]
-    assert str(ids[0]) in scan and str(ids[-1]) in scan
+    df = read.read_range(store, url=url)
+    plan = df._jdf.queryExecution().executedPlan().toString()
+    assert "Coalesce 1" in plan
+    assert plan.count("Exchange") == 0
+    assert df.rdd.getNumPartitions() == 1
+    assert read.read_range(store).rdd.getNumPartitions() > 1
 
 
 def test_describe_never_touches_payloads(store):

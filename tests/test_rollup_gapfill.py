@@ -148,19 +148,20 @@ def test_checkpoint_resume_idempotent(spark, series, tmp_path):
 
 
 def _parquet_files(root):
-    import os
     return [f for _, _, fs in os.walk(root) for f in fs
             if f.startswith("part-") and f.endswith(".parquet")]
 
 
-def test_resume_reads_legacy_checkpoints_table(spark, series, tmp_path):
-    """Stores written before the lineage row became the done marker
-    keep their done units in ``checkpoints/``: resume still skips them.
-    A current run writes no checkpoints table and one lineage file per
+def test_resume_recompresses_unit_without_lineage_row(
+    spark, series, tmp_path
+):
+    """Older stores marked units done in a ``checkpoints/`` table and
+    appended the lineage rows after it, so a crash between the two
+    appends left a unit checkpointed with no lineage row. Resume reads
+    only lineage: that unit is recompressed and gains its row. A
+    current run writes no checkpoints table and one lineage file per
     batch."""
-    import shutil
-
-    st = ChunkStore(spark, str(tmp_path / "legacy"))
+    st = ChunkStore(spark, str(tmp_path / "older"))
     job = ResumableCompressJob(st, "job-l", units_per_batch=2)
     with pytest.raises(RuntimeError, match="simulated"):
         job.run(series, fail_after_batches=2)
@@ -168,17 +169,22 @@ def test_resume_reads_legacy_checkpoints_table(spark, series, tmp_path):
     assert len(_parquet_files(st.path("lineage"))) == 2
     done = job.done_units()
     assert len(done) == 4
-    # rewrite the store into the legacy layout: done markers in
-    # checkpoints/, no lineage rows for them
+    # the older layout: every done unit checkpointed, one unit's
+    # lineage row lost to a crash between the two appends
     spark.createDataFrame(
         [("job-l", int(u)) for u in done], "job_id string, unit long"
     ).write.parquet(st.path("checkpoints"))
-    shutil.rmtree(st.path("lineage"))
-    assert job.done_units() == done
+    lost = min(done)
+    ln = st.table("lineage")
+    kept = [r for r in ln.collect() if r["unit"] != lost]
+    spark.createDataFrame(kept, ln.schema).write.mode("overwrite") \
+        .parquet(st.path("lineage"))
+    assert job.done_units() == done - {lost}
     res = job.run(series)
-    assert res["units_already_done"] == len(done)
-    assert res["units_processed"] == res["units_total"] - len(done)
+    assert res["units_already_done"] == len(done) - 1
+    assert res["units_processed"] == res["units_total"] - len(done) + 1
     assert job.done_units() == set(job.plan_units(series))
+    assert job.lineage().filter(F.col("unit") == lost).count() == 1
     got = {tuple(r) for r in read.read_range(st).select(
         "url", TS_COL, "value").collect()}
     assert got == {tuple(r) for r in series.select(
@@ -186,9 +192,9 @@ def test_resume_reads_legacy_checkpoints_table(spark, series, tmp_path):
 
 
 def test_lineage_row_alone_marks_unit_done(spark, series, tmp_path):
-    """A unit with a lineage row (and no checkpoints table) is done:
-    the lineage append is the one done marker, so a crash can never
-    leave a unit marked done without its lineage row."""
+    """A unit with a lineage row is done: the lineage append is the one
+    done marker, so a crash can never leave a unit marked done without
+    its lineage row."""
     st = ChunkStore(spark, str(tmp_path / "ln_only"))
     job = ResumableCompressJob(st, "job-m")
     units = job.plan_units(series)
