@@ -69,12 +69,13 @@ class ResumableCompressJob:
     def done_units(self) -> set[int]:
         if not self.store.has("lineage"):
             return set()
+        # the set is built here: a distinct() would run its shuffle as
+        # a second Spark job under AQE
         return {
             r[0]
             for r in self.store.table("lineage")
             .filter(F.col("job_id") == self.job_id)
             .select("unit")
-            .distinct()
             .collect()
         }
 
