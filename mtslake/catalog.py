@@ -21,6 +21,7 @@ import json
 import os
 
 from pyspark.sql import DataFrame, SparkSession, functions as F
+from pyspark.sql.types import BinaryType, StructType
 
 from .config import EngineConfig, DEFAULT
 
@@ -52,6 +53,23 @@ def _catalog_cols(chunks: DataFrame) -> list:
     return base + stats
 
 
+def chunk_write_options(chunks: DataFrame) -> dict[str, str]:
+    """Parquet write options for every chunk-table write: no min/max
+    statistics (and so no page index) on the payload columns — every
+    binary column of a chunk row is a payload (``p_ts`` and one per
+    channel). No reader filters on payload bytes, yet their statistics
+    were most of each file's footer (the ``p_sha1`` minimum alone is
+    1.8 KB, measured 42.7 → 37.2 B per stored point). Statistics stay
+    on ``url``, ``ts_min``/``ts_max`` and the ``*_min``/``*_max`` value
+    columns, which ``prune_chunks`` and ``prune_chunks_by_value`` push
+    down."""
+    return {
+        f"parquet.column.statistics.enabled#{f.name}": "false"
+        for f in chunks.schema.fields
+        if isinstance(f.dataType, BinaryType)
+    }
+
+
 class ChunkStore:
     """Filesystem layout of one engine instance.
 
@@ -69,7 +87,7 @@ class ChunkStore:
     def __init__(self, spark: SparkSession, root: str):
         self.spark = spark
         self.root = root
-        self._tables: dict = {}  # (name, options) -> (files, DataFrame)
+        self._tables: dict = {}  # table() key -> (files, DataFrame)
 
     def path(self, name: str) -> str:
         return os.path.join(self.root, name)
@@ -194,9 +212,12 @@ class ChunkStore:
             # second (tiny) projection from re-encoding.
             clustered.write.mode(mode).option(
                 "compression", chunks_codec
-            ).partitionBy("chunk_id").parquet(self.path("chunks"))
+            ).options(**chunk_write_options(clustered)).partitionBy(
+                "chunk_id"
+            ).parquet(self.path("chunks"))
             self.spark.catalog.refreshByPath(self.path("chunks"))
-            src = self.chunks()
+            # the schema just written: the read-back runs no inference
+            src = self.table("chunks", schema=clustered.schema)
         else:
             # append cannot re-derive from a read-back (it would see
             # pre-existing rows too) — cache the batch so the encode
@@ -204,7 +225,9 @@ class ChunkStore:
             src = clustered.persist()
             src.write.mode(mode).option(
                 "compression", chunks_codec
-            ).partitionBy("chunk_id").parquet(self.path("chunks"))
+            ).options(**chunk_write_options(src)).partitionBy(
+                "chunk_id"
+            ).parquet(self.path("chunks"))
         try:
             # catalog rows are tiny (one per chunk): funnel to one task
             # per write so each batch adds O(1) files per touched
@@ -255,10 +278,17 @@ class ChunkStore:
                             st.st_mtime_ns))
         return frozenset(out)
 
-    def table(self, name: str, **options: str) -> DataFrame:
+    def table(self, name: str, schema: StructType | str | None = None,
+              **options: str) -> DataFrame:
         """The store table ``name`` as a DataFrame, read with the given
         Parquet ``options``, opened once and reused while its files are
         unchanged.
+
+        ``schema`` is a schema the caller already knows (a writer's
+        read-back of what it just wrote): Spark then opens the table
+        without a schema-inference job. Without it Spark infers the
+        schema from the files, so a table rewritten with other columns
+        reopens with them.
 
         Opening a partitioned table costs Spark a listing job (past 32
         partition directories the listing itself runs as a job) and a
@@ -270,12 +300,16 @@ class ChunkStore:
         in place — reopens through Spark, so a reader never scans a
         stale file set. Nothing is cached but the plan; the walk is
         O(files) like Spark's own listing, but runs no Spark job."""
-        key = (name, tuple(sorted(options.items())))
+        skey = schema.json() if isinstance(schema, StructType) else schema
+        key = (name, skey, tuple(sorted(options.items())))
         files = self._listing(name)
         hit = self._tables.get(key)
         if hit is not None and hit[0] == files:
             return hit[1]
-        df = self.spark.read.options(**options).parquet(self.path(name))
+        reader = self.spark.read.options(**options)
+        if schema is not None:
+            reader = reader.schema(schema)
+        df = reader.parquet(self.path(name))
         self._tables[key] = (files, df)
         return df
 

@@ -637,6 +637,19 @@ def _pa_series_schema(want: tuple[ChannelSpec, ...]) -> pa.Schema:
 _DECODE_FLUSH_POINTS = 4_000_000
 
 
+def _check_sha1(url: str, sha1: str, ts: np.ndarray,
+                values: dict[str, np.ndarray]) -> None:
+    """Raise unless the SHA1 of the decoded ``ts`` and numeric channel
+    ``values`` equals the chunk row's ledger entry ``sha1``."""
+    got = codec.chunk_sha1(ts, values)
+    if got != sha1:
+        # ≙ "CRITICAL ERROR" hard failure, mtscomp.py:880-888
+        raise RuntimeError(
+            f"chunk integrity failure url={url} "
+            f"expected sha1={sha1} got={got}"
+        )
+
+
 def _decode_batches_arrow(
     t: pa.Table,
     verify: bool,
@@ -691,15 +704,7 @@ def _decode_batches_arrow(
         if verify:
             for c in numeric:
                 decoded[c.name] = codec.decode_column(cols[c.pcol][i])
-            got = codec.chunk_sha1(
-                ts, {c.name: decoded[c.name] for c in numeric}
-            )
-            if got != cols["sha1"][i]:
-                # ≙ "CRITICAL ERROR" hard failure, mtscomp.py:880-888
-                raise RuntimeError(
-                    f"chunk integrity failure url={cols['url'][i]} "
-                    f"expected sha1={cols['sha1'][i]} got={got}"
-                )
+            _check_sha1(cols["url"][i], cols["sha1"][i], ts, decoded)
         tss.append(ts)
         counts.append(len(ts))
         urls.append(cols["url"][i])
@@ -764,5 +769,41 @@ def decompress_chunks(
             yield from _decode_batches_arrow(
                 pa.Table.from_batches([rb]), _verify, _want, _spec
             )
+
+    return src.mapInArrow(gen, schema=schema)
+
+
+def verify_chunks(
+    chunks: DataFrame,
+    keep: list[str],
+    spec: tuple[ChannelSpec, ...] = DEFAULT_CHANNELS,
+) -> DataFrame:
+    """Chunk rows projected to ``keep``, each emitted only after its
+    SHA1 is recomputed from the ``p_ts`` and numeric payloads and found
+    equal to the row's ledger entry; a mismatch raises inside the task
+    and fails the job (≙ the post-write check, mtscomp.py:497-506).
+
+    One Arrow pass that checks and projects: a caller deriving the
+    catalog from freshly written chunk rows writes only verified rows,
+    in the same job as the check. Binary channels are not decoded (the
+    ledger does not cover them), and no point-level rows are built."""
+    numeric = [c for c in spec if not c.is_binary]
+    src = chunks.select(*dict.fromkeys(
+        [*keep, "url", "sha1", "p_ts", *(c.pcol for c in numeric)]
+    ))
+    schema = T.StructType([src.schema[k] for k in keep])
+
+    def gen(batches, _keep=tuple(keep), _numeric=tuple(numeric)):
+        for rb in batches:
+            urls = rb.column("url").to_pylist()
+            sha1s = rb.column("sha1").to_pylist()
+            p_ts = rb.column("p_ts").to_pylist()
+            pays = {c.name: rb.column(c.pcol).to_pylist() for c in _numeric}
+            for i in range(rb.num_rows):
+                _check_sha1(
+                    urls[i], sha1s[i], codec.decode_column(p_ts[i]),
+                    {n: codec.decode_column(v[i]) for n, v in pays.items()},
+                )
+            yield rb.select(list(_keep))
 
     return src.mapInArrow(gen, schema=schema)

@@ -26,7 +26,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from .catalog import ChunkStore, _catalog_cols
+from .catalog import ChunkStore, _catalog_cols, chunk_write_options
 from .chunk import compress_series, decompress_chunks
 from .ckpt import eager_checkpoint, release as release_ckpt
 from .config import EngineConfig, DEFAULT
@@ -135,7 +135,9 @@ def compact(
         # affected chunk_id partitions in BOTH tables
         rewritten.write.mode("overwrite").option(
             "partitionOverwriteMode", "dynamic"
-        ).partitionBy("chunk_id").parquet(store.path("chunks"))
+        ).options(**chunk_write_options(rewritten)).partitionBy(
+            "chunk_id"
+        ).parquet(store.path("chunks"))
         rewritten.select(*_catalog_cols(rewritten)).coalesce(1).write.mode(
             "overwrite"
         ).option("partitionOverwriteMode", "dynamic").partitionBy(

@@ -8,19 +8,34 @@ unit the job writes:
   re-processing a unit replaces exactly its partition (idempotent:
   deterministic chunk ids + overwrite ⇒ a re-run after a mid-job kill
   neither duplicates nor skips — SURVEY §7 risk 7);
+* its catalog rows, by the same dynamic overwrite;
 * a **lineage row** (job_id, unit, n_chunks, n_points, bytes, ratio,
   batch_wall_ms, units_in_batch) — ≙ the reference's per-chunk ratio
   logging (mtscomp.py:490-492) promoted to a queryable table; stores
   written before the batch_wall_ms rename (one wall_ms per unit) are
   read back schema-merged with wall_ms coalesced in.
 
+A batch runs in this order, ≙ the reference writer's one pass that
+writes the chunks, then checks them once, then dumps the ``.ch``
+sidecar (mtscomp.py:425-507):
+
+1. chunk write;
+2. the ``before_check`` hook;
+3. the verified catalog: one Arrow pass over the batch's chunk rows as
+   they are on disk recomputes each chunk's SHA1 (a mismatch fails the
+   job) and emits its catalog row, and the catalog write observes the
+   per-unit stats (``check_after_compress=False``: a plain projection,
+   same observation) — a tampered batch leaves no catalog row;
+4. the lineage rows, written by the driver as one Parquet file.
+
 The lineage row is also the unit's **done marker** — the .ch-style
 manifest reborn as a snapshot log; resume = anti-join(all units, done
-units). One append per batch marks its units done together with their
-metrics, so no crash can leave a unit done without its lineage row.
-A ``checkpoints/`` table left by older versions is not read: a unit it
-marks done without a lineage row is one such crash cut short, and
-resume recompresses it (idempotent, above) and writes its row.
+units). The batch's rows land in one atomic file rename after every
+other write, so no crash can leave a unit done without its chunks,
+catalog rows and lineage row. A ``checkpoints/`` table left by older
+versions is not read: a unit it marks done without a lineage row is
+one such crash cut short, and resume recompresses it (idempotent,
+above) and writes its row.
 
 The driver loop iterates over partition units (metadata-scale), never
 over rows — each unit is one distributed Spark job.
@@ -28,14 +43,32 @@ over rows — each unit is one distributed Spark job.
 
 from __future__ import annotations
 
+import os
 import time
+import uuid
 
-from pyspark.sql import DataFrame, functions as F
+import pyarrow as pa
+import pyarrow.parquet as pq
+from pyspark.sql import DataFrame, Observation, functions as F
 
-from .catalog import ChunkStore
-from .chunk import compress_series
+from . import chunk
+from .catalog import ChunkStore, _catalog_cols, chunk_write_options
 from .config import EngineConfig, DEFAULT
 from .series import TS_COL
+
+# wall time is measured ONCE per batch; recording it per unit under a
+# per-unit name overstated SUM(wall) by the batch factor. batch_wall_ms
+# repeats per unit row with units_in_batch alongside, so job cost =
+# SUM(batch_wall_ms / units_in_batch) and per-unit throughput uses the
+# same division.
+LINEAGE_SCHEMA = pa.schema([
+    ("job_id", pa.string()), ("unit", pa.int64()),
+    ("n_chunks", pa.int64()), ("n_points", pa.int64()),
+    ("raw_nbytes", pa.int64()), ("comp_nbytes", pa.int64()),
+    ("ratio", pa.float64()), ("batch_wall_ms", pa.int64()),
+    ("units_in_batch", pa.int64()),
+])
+_UNIT_STATS = ("n_chunks", "n_points", "raw_nbytes", "comp_nbytes")
 
 
 class ResumableCompressJob:
@@ -73,7 +106,9 @@ class ResumableCompressJob:
         # a second Spark job under AQE
         return {
             r[0]
-            for r in self.store.table("lineage")
+            for r in self.store.table(
+                "lineage", schema="job_id string, unit long"
+            )
             .filter(F.col("job_id") == self.job_id)
             .select("unit")
             .collect()
@@ -81,31 +116,24 @@ class ResumableCompressJob:
 
     def _mark_done(self, meta: list[dict]) -> None:
         """Append the batch's lineage rows as one file: the rows are
-        the units' done markers (see the module docstring). The rows
-        are parallelized into one slice; a ``coalesce(1)`` over the
-        default slices costs twice the write (measured 1.1 s vs
-        0.45 s on 4 cores)."""
-        ln = self.spark.createDataFrame(
-            self.spark.sparkContext.parallelize([
-                (
-                    self.job_id, int(m["unit"]), int(m["n_chunks"]),
-                    int(m["n_points"]), int(m["raw_nbytes"]),
-                    int(m["comp_nbytes"]), float(m["ratio"]),
-                    int(m["batch_wall_ms"]), int(m["units_in_batch"]),
-                )
-                for m in meta
-            ], 1),
-            "job_id string, unit long, n_chunks long, n_points long, "
-            "raw_nbytes long, comp_nbytes long, ratio double, "
-            # wall time is measured ONCE per batch (the write is one
-            # Spark job); recording it per unit under a per-unit name
-            # overstated SUM(wall) by the batch factor. batch_wall_ms
-            # repeats per unit row with units_in_batch alongside, so
-            # job cost = SUM(batch_wall_ms / units_in_batch) and
-            # per-unit throughput uses the same division.
-            "batch_wall_ms long, units_in_batch long",
+        the units' done markers (see the module docstring). The driver
+        writes the few rows itself under a ``.``-prefixed name, which
+        no reader lists, and renames the finished file into place, so
+        a reader sees all of the batch's rows or none. A Spark write of
+        the rows costs a job (measured 0.33 s; a ``coalesce(1)`` over
+        ``createDataFrame`` 1.1 s, on 4 cores). The store is a local
+        POSIX directory (``ChunkStore._listing``)."""
+        root = self.store.path("lineage")
+        os.makedirs(root, exist_ok=True)
+        rows = pa.Table.from_pylist(
+            [{"job_id": self.job_id, **m} for m in meta],
+            schema=LINEAGE_SCHEMA,
         )
-        ln.write.mode("append").parquet(self.store.path("lineage"))
+        name = f"part-{uuid.uuid4().hex}.parquet"
+        tmp = os.path.join(root, f".{name}.tmp")
+        pq.write_table(rows, tmp)
+        os.replace(tmp, os.path.join(root, name))
+        self.spark.catalog.refreshByPath(root)
 
     # -- planning + execution ------------------------------------------------
 
@@ -120,6 +148,54 @@ class ResumableCompressJob:
         ]
         return sorted(units)
 
+    def _write_catalog(self, batch: list[int], schema) -> list[dict]:
+        """Write the batch's catalog rows from its chunk rows as they
+        are on disk now, verified first when ``check_after_compress``
+        is on, and return the per-unit stats the write observed.
+
+        The read-back opens the chunks table with ``schema``, the
+        schema of the chunk rows just written (no inference job), and
+        prunes to the batch's partitions, so the check and the catalog
+        do O(batch) work, never O(table)."""
+        written = self.store.table("chunks", schema=schema).filter(
+            F.col("chunk_id").isin(batch)
+        )
+        cols = _catalog_cols(written)
+        if self.cfg.check_after_compress:
+            # ≙ automatic integrity check after compression
+            # (mtscomp.py:497-506): the catalog rows come out of the
+            # check, so only verified chunks are cataloged
+            cat = chunk.verify_chunks(written, cols)
+        else:
+            cat = written.select(*cols)
+        # per-unit stats as aggregates observed by the write itself
+        # (a batch holds at most units_per_batch units)
+        obs = Observation()
+        cid = F.col("chunk_id")
+        cat = cat.observe(obs, *[
+            (F.count(F.when(cid == u, 1)) if s == "n_chunks"
+             else F.sum(F.when(cid == u, F.col(s)))).alias(f"{i}:{s}")
+            for i, u in enumerate(batch) for s in _UNIT_STATS
+        ])
+        # catalog rows are tiny: one task writes them, so each batch
+        # adds one file per touched partition. repartition(1), NOT
+        # coalesce(1): coalesce would fold the one-task boundary into
+        # the scan and run the Python check on one task
+        # (ChunkStore.write_chunks). Dynamic partition overwrite
+        # replaces exactly the batch's catalog partitions (idempotent
+        # on re-run, like the chunk write)
+        cat.repartition(1).write.mode("overwrite").option(
+            "partitionOverwriteMode", "dynamic"
+        ).partitionBy("chunk_id").parquet(self.store.path("catalog"))
+        self.spark.catalog.refreshByPath(self.store.path("catalog"))
+        got = obs.get
+        stats = []
+        for i, u in enumerate(batch):
+            m = {s: int(got[f"{i}:{s}"] or 0) for s in _UNIT_STATS}
+            if m["n_chunks"]:
+                stats.append({"unit": u, **m})
+        return stats
+
     def run(self, series: DataFrame, fail_after_batches: int | None = None) -> dict:
         """Process all pending units; fail_after_batches simulates a
         mid-job kill (tests). Returns run metrics.
@@ -129,7 +205,6 @@ class ResumableCompressJob:
         a date-partitioned pages/series table (the warehouse layout)
         the chunk-unit predicate is a partition filter and each batch
         reads just its own partitions."""
-        spark = self.spark
         all_units = self.plan_units(series)
         done = self.done_units()
         pending = [u for u in all_units if u not in done]
@@ -142,86 +217,47 @@ class ResumableCompressJob:
             if fail_after_batches is not None and bi >= fail_after_batches:
                 raise RuntimeError("simulated mid-job kill")
             t0 = time.monotonic()
-            sub = series.filter(
-                F.floor(F.col(TS_COL) / self.cfg.chunk_duration_us).isin(
-                    [int(u) for u in batch]
-                )
+            batch = [int(u) for u in batch]
+            chunks = chunk.compress_series(
+                series.filter(
+                    F.floor(F.col(TS_COL) / self.cfg.chunk_duration_us)
+                    .isin(batch)
+                ),
+                self.cfg,
             )
-            chunks = compress_series(sub, self.cfg)
             # dynamic overwrite scoped to THIS write (not the session
             # conf): replaces exactly the batch's chunk_id partitions,
             # while an unrelated later write_chunks(mode='overwrite') in
             # the same session keeps static truncate semantics
             chunks.write.mode("overwrite").option(
                 "partitionOverwriteMode", "dynamic"
-            ).partitionBy("chunk_id").parquet(self.store.path("chunks"))
-            # the overwrite may DELETE files the session's shared
-            # FileStatusCache still lists; the re-read below (unit
-            # stats + integrity check) must see the committed state
-            # (same rule as retention.drop_chunk_partitions / compact)
-            spark.catalog.refreshByPath(self.store.path("chunks"))
-            # this read prunes to the batch's partitions only — unit
-            # stats, catalog maintenance, and the automatic post-write
-            # check all do O(batch) work, never O(table)
-            written = self.store.chunks().filter(
-                F.col("chunk_id").isin([int(u) for u in batch])
-            )
-            # incremental catalog: dynamic partition overwrite replaces
-            # exactly this batch's catalog partitions (idempotent on
-            # re-run, like the chunk write itself)
-            from .catalog import _catalog_cols
-
-            written.select(*_catalog_cols(written)).coalesce(1).write.mode(
-                "overwrite"
-            ).option("partitionOverwriteMode", "dynamic").partitionBy(
+            ).options(**chunk_write_options(chunks)).partitionBy(
                 "chunk_id"
-            ).parquet(self.store.path("catalog"))
-            spark.catalog.refreshByPath(self.store.path("catalog"))
+            ).parquet(self.store.path("chunks"))
+            # the overwrite may DELETE files the session's shared
+            # FileStatusCache still lists; the read-back must see the
+            # committed state (same rule as
+            # retention.drop_chunk_partitions / compact)
+            self.spark.catalog.refreshByPath(self.store.path("chunks"))
             if self.cfg.check_after_compress:
-                # callback before the check, ≙ mtscomp.py:498-499
+                # callback before the check, ≙ mtscomp.py:498-499; the
+                # check reads the store after it, so it verifies the
+                # bytes on disk now and hook-injected tampering is
+                # caught
                 self.before_check(self)
-                # ≙ automatic integrity check after compression
-                # (mtscomp.py:497-506): decode what was just written,
-                # recomputing each chunk's SHA1 — a mismatch raises
-                # inside the decode tasks and fails the job. The check
-                # re-lists the store AFTER the hook (a fresh scan, not
-                # the pre-hook plan): it verifies the bytes actually on
-                # disk now, so hook-injected tampering is caught
-                from .chunk import decompress_chunks
-
-                check_df = self.store.chunks().filter(
-                    F.col("chunk_id").isin([int(u) for u in batch])
-                )
-                decompress_chunks(check_df, verify=True).count()
-            # wall covers the chunk write, catalog mirror, and the
-            # post-write integrity check — the batch's full cost, not
-            # just the first write
+            stats = self._write_catalog(batch, chunks.schema)
+            # wall covers the chunk write, the check and the catalog
+            # write — the batch's full cost, not just the first write
             wall = int((time.monotonic() - t0) * 1000)
-            stats = (
-                written
-                .groupBy("chunk_id")
-                .agg(
-                    F.count("*").alias("n_chunks"),
-                    F.sum("n_points").alias("n_points"),
-                    F.sum("raw_nbytes").alias("raw_nbytes"),
-                    F.sum("comp_nbytes").alias("comp_nbytes"),
-                )
-                .collect()
-            )
-            meta = [
+            self._mark_done([
                 {
-                    "unit": r["chunk_id"],
-                    "n_chunks": r["n_chunks"],
-                    "n_points": r["n_points"],
-                    "raw_nbytes": r["raw_nbytes"],
-                    "comp_nbytes": r["comp_nbytes"],
-                    "ratio": r["comp_nbytes"] / max(r["raw_nbytes"], 1),
+                    **m,
+                    "ratio": m["comp_nbytes"] / max(m["raw_nbytes"], 1),
                     "batch_wall_ms": wall,
                     "units_in_batch": len(stats),
                 }
-                for r in stats
-            ]
-            self._mark_done(meta)
+                for m in stats
+            ])
             n_done += len(batch)
         return {
             "job_id": self.job_id,

@@ -33,6 +33,7 @@ Two exactness decisions:
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, Observation, functions as F
+from pyspark.sql.types import StructType
 
 from .config import TIER_US
 from .series import TS_COL, url_prefix
@@ -207,14 +208,17 @@ def with_part_id(rolled: DataFrame, tier: str) -> DataFrame:
     )
 
 
-def _write_tier(store, rolled: DataFrame, tier: str) -> None:
-    with_part_id(rolled, tier).write.mode("overwrite").partitionBy(
-        "part_id"
-    ).parquet(store.path(f"rollup_{tier}"))
+def _write_tier(store, rolled: DataFrame, tier: str) -> StructType:
+    """Overwrite the tier; returns the schema written."""
+    out = with_part_id(rolled, tier)
+    out.write.mode("overwrite").partitionBy("part_id").parquet(
+        store.path(f"rollup_{tier}")
+    )
     # materialize_tiers re-reads the tier it just overwrote (and so do
     # repeated pipeline runs in one session): drop any cached file
     # listing so no reader resolves deleted pre-overwrite files
     store.spark.catalog.refreshByPath(store.path(f"rollup_{tier}"))
+    return out.schema
 
 
 def _affected_parts(chunk_ids, dur_us: int, part_us: int) -> list[int]:
@@ -266,14 +270,19 @@ def refresh_tiers(store, chunk_ids, cfg=None) -> dict:
     # range predicates, not isin literals: affected id sets are
     # contiguous time runs, and a full-history refresh must not build
     # an O(ids) expression (see id_range_predicate)
-    chunks = store.chunks().filter(id_range_predicate("chunk_id", read_ids))
-    from .chunk import decompress_chunks
+    from .chunk import CHUNK_SCHEMA, decompress_chunks
+
+    # read with the chunk-row schema: no inference job (refresh decodes
+    # the default channels' p_value, so the store has that layout)
+    chunks = store.table("chunks", schema=CHUNK_SCHEMA).filter(
+        id_range_predicate("chunk_id", read_ids)
+    )
 
     series = decompress_chunks(chunks, channels=("value",))
     one_m = with_part_id(rollup_from_series(series, "1m"), "1m").filter(
         id_range_predicate("part_id", parts_1m)
     )
-    _overwrite_parts(store, one_m, "1m", parts_1m)
+    schema = _overwrite_parts(store, one_m, "1m", parts_1m)
     refreshed["1m"] = parts_1m
 
     # -- coarser tiers from the finer one -------------------------------
@@ -283,26 +292,28 @@ def refresh_tiers(store, chunk_ids, cfg=None) -> dict:
         finer_parts = _affected_parts(
             parts, ROLLUP_PART_US[tier], ROLLUP_PART_US[finer]
         )
-        lower = store.table(f"rollup_{finer}").filter(
+        # the finer tier opens with the schema just written to it
+        lower = store.table(f"rollup_{finer}", schema=schema).filter(
             id_range_predicate("part_id", finer_parts)
         )
         out = with_part_id(rollup_from_tier(lower, tier), tier).filter(
             id_range_predicate("part_id", parts)
         )
-        _overwrite_parts(store, out, tier, parts)
+        schema = _overwrite_parts(store, out, tier, parts)
         refreshed[tier] = parts
     return refreshed
 
 
 def _overwrite_parts(store, rolled_with_part: DataFrame, tier: str,
-                     affected_parts: list[int]) -> None:
+                     affected_parts: list[int]) -> StructType:
     """Dynamic-overwrite the refreshed partitions, then DELETE any
     affected partition absent from the recomputed output: dynamic
     overwrite only replaces partitions present in the written frame, so
     a refreshed window whose recompute yields zero rows (compaction or
     retention removed its raw data) would otherwise leave its stale
     rollup partition on disk forever. The written part_ids are observed
-    by the write itself — no cache, no second pass over the frame."""
+    by the write itself — no cache, no second pass over the frame.
+    Returns the schema written."""
     import os
     import shutil
 
@@ -320,6 +331,7 @@ def _overwrite_parts(store, rolled_with_part: DataFrame, tier: str,
         if os.path.isdir(d):
             shutil.rmtree(d)
     store.spark.catalog.refreshByPath(store.path(f"rollup_{tier}"))
+    return rolled_with_part.schema
 
 
 def materialize_tiers(store, series: DataFrame) -> None:
@@ -340,10 +352,12 @@ def materialize_tiers(store, series: DataFrame) -> None:
     finished 1m files is far cheaper than that second pass, and
     parquet round-trips longs/decimals losslessly, so tier equality is
     unchanged (pytest asserts 1d(1h(1m)) ≡ direct aggregation)."""
-    _write_tier(store, rollup_from_series(series, "1m"), "1m")
+    schema = _write_tier(store, rollup_from_series(series, "1m"), "1m")
     for tier in ("1h", "1d"):
-        lower = store.table(f"rollup_{TIER_BELOW[tier]}")
-        _write_tier(store, rollup_from_tier(lower, tier), tier)
+        # the finer tier opens with the schema just written: no
+        # inference job
+        lower = store.table(f"rollup_{TIER_BELOW[tier]}", schema=schema)
+        schema = _write_tier(store, rollup_from_tier(lower, tier), tier)
 
 
 def moving_aggregate(
